@@ -5,10 +5,11 @@ first 100 rows of the CSV, take pandas dtypes, and map them onto a 5-type
 vocabulary (INT / FLOAT / TIMESTAMP / BOOLEAN / VARCHAR-fallback).
 
 Spark-first shape: read the file *head* as text (the limit is pushed into
-the scan, so only the first split of a 100 GB file is touched), parse that
-tiny sample with Spark's CSV inference on the driver-collected lines, then
-coerce the inferred types down to the 5-type vocabulary. Integers widen to
-LongType — taxi-style surrogate IDs overflow 32-bit at 100 TB (SURVEY §1.2).
+the scan, so only the first split of a 100 GB file is touched), run Spark's
+CSV inference on that sample as a JVM ``Dataset[String]`` (no Python worker,
+no pickling), then coerce the inferred types down to the 5-type
+vocabulary. Integers widen to LongType — taxi-style surrogate IDs overflow
+32-bit at 100 TB (SURVEY §1.2).
 """
 
 from __future__ import annotations
@@ -73,19 +74,18 @@ def infer_csv_schema(
     (agent-schema/app.py:181, :186). The text read's ``limit`` is pushed
     to the scan (LocalLimit over the file source), so on a huge file only
     the leading split is read — this stays metadata-cheap at any scale.
-    The collected sample (<=101 short lines) is parsed on the driver via
-    Spark's own CSV inference, then collapsed to the 5-type vocabulary.
+    The sample (<=101 short lines) is collected inside the JVM and fed as
+    a local ``Dataset[String]`` straight to Spark's own CSV inference — no
+    Python worker or pickling, and the inference runs over the local
+    rows instead of re-scanning the limited file — then collapses to the
+    5-type vocabulary.
     """
-    head = [
-        r.value
-        for r in spark.read.text(path).limit(sample_rows + 1).collect()
-    ]
-    sample = spark.sparkContext.parallelize(head, 1)
-    inferred = (
+    enc = spark._jvm.Encoders.STRING()
+    head = getattr(spark.read.text(path).limit(sample_rows + 1)._jdf, "as")(enc)
+    lines = spark._jsparkSession.createDataset(head.collectAsList(), enc)
+    reader = (
         spark.read.option("header", "true")
         .option("inferSchema", "true")
         .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-        .csv(sample)
-        .schema
     )
-    return sanitize_schema(inferred)
+    return sanitize_schema(reader._df(reader._jreader.csv(lines)).schema)

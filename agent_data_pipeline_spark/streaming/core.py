@@ -28,7 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import TimestampNTZType
 
 
@@ -159,51 +159,63 @@ def stream_dedup(
     return df.dropDuplicates(keys)
 
 
+def _stream_width(spark: SparkSession) -> int:
+    """Shuffle/state width every stream starts at: max(4, cores/8), or
+    $SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS. See ``_start``."""
+    cores = spark.sparkContext.defaultParallelism
+    return int(
+        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", max(4, cores // 8))
+    )
+
+
+def _start(writer: DataStreamWriter, spark: SparkSession) -> StreamingQuery:
+    """Start ``writer`` at the stream shuffle/state width — the one path
+    every sink starts through.
+
+    A stateful micro-batch pays per-state-store file I/O (snapshot read +
+    delta write + commit) PER PARTITION PER BATCH, so the state partition
+    count should track STATE VOLUME, not core count — the finite-replay
+    fixtures carry <= ~4k state rows, where 32 stores measured 1.58
+    s/drain vs 0.75 s at 4 (the batch agg itself is ~0.2 s), and a dedup
+    -> window-agg parquet sink over 3 files of 10k events drained in a
+    median 3.4 s at 4 stores vs 4.5 s at 8 (4 cores). Width =
+    ``_stream_width``, overridable with
+    $SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS for production streams with
+    large state (set it to >= cores there). Safe to set-and-restore
+    around ``start()``: Structured Streaming clones the session (and its
+    conf) at query start — verified: restoring before the first batch
+    still runs the stream at the width set here. The width is fixed in
+    the checkpoint at the first start, so a restarted query keeps its
+    original width whatever the setting.
+
+    Concurrency caveat: the set/restore mutates the SESSION-global
+    ``spark.sql.shuffle.partitions`` for the duration of ``start()``, so a
+    query planned CONCURRENTLY on the same session in that window would
+    pick up the narrow stream width (a performance nuance, never a
+    correctness one — results are width-independent). The engine's
+    harnesses (bench, oracle differential, tests) start streams
+    single-threaded; a multi-threaded caller should set the env override
+    to its session-wide width so set == restore.
+    """
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(_stream_width(spark)))
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def stream_to_memory(
     df: DataFrame,
     name: str,
     output_mode: str = "append",
 ) -> StreamingQuery:
     """Memory sink — the test/debug harness. NOT a scale path (results
-    collect on the driver); production goes through foreachBatch.
-
-    Stream shuffle/state width: a stateful micro-batch pays per-state-
-    store file I/O (snapshot read + delta write + commit) PER PARTITION
-    PER BATCH, so the state partition count should track STATE VOLUME,
-    not core count — the finite-replay fixtures carry <= ~4k state rows,
-    where 32 stores measured 1.58 s/drain vs 0.75 s at 4 (the batch agg
-    itself is ~0.2 s). Width = max(4, cores/8), overridable with
-    $SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS for production streams with
-    large state (set it to >= cores there). Safe to set-and-restore
-    around ``start()``: Structured Streaming clones the session (and its
-    conf) at query start — verified: restoring before the first batch
-    still runs the stream at the width set here.
-
-    Concurrency caveat (ADVICE r14): the set/restore mutates the
-    SESSION-global ``spark.sql.shuffle.partitions`` for the duration of
-    ``start()``, so a query planned CONCURRENTLY on the same session in
-    that window would pick up the narrow stream width (a performance
-    nuance, never a correctness one — results are width-independent).
-    The engine's harnesses (bench, oracle differential, tests) drain
-    streams single-threaded; a multi-threaded caller should set the env
-    override to its session-wide width so set == restore.
-    """
-    spark = df.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    width = int(
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", max(4, cores // 8))
+    collect on the driver); production goes through foreachBatch."""
+    return _start(
+        df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        df.sparkSession,
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
-        return (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def foreach_batch_parquet_sink(
@@ -228,11 +240,11 @@ def foreach_batch_parquet_sink(
         if batch_hook is not None:
             batch_hook(batch, epoch_id)
 
-    return (
+    return _start(
         df.writeStream.foreachBatch(_write)
         .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        df.sparkSession,
     )
 
 

@@ -68,7 +68,7 @@ def test_zone_from_path():
     assert zone_from_path("/somewhere/else.csv") == "raw"
 
 
-def test_infer_csv_schema_five_types(spark, csv_v1):
+def test_infer_csv_schema_five_types(spark, csv_v1, tmp_path):
     schema = infer_csv_schema(spark, csv_v1)
     got = {f.name: f.dataType for f in schema.fields}
     assert got == {
@@ -78,6 +78,15 @@ def test_infer_csv_schema_five_types(spark, csv_v1):
         "is_shared": T.BooleanType(),
         "note": T.StringType(),
     }
+    # header only: no sample rows to type from, every column falls back
+    # to the vocabulary's VARCHAR
+    header_only = tmp_path / "header_only.csv"
+    header_only.write_text(CSV_V1.splitlines()[0] + "\n")
+    schema = infer_csv_schema(spark, str(header_only))
+    assert [(f.name, f.dataType) for f in schema.fields] == [
+        (name, T.StringType())
+        for name in ("trip_id", "fare_amount", "pickup_time", "is_shared", "note")
+    ]
 
 
 def test_infer_respects_sample_bound(spark, tmp_path):

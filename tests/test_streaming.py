@@ -18,6 +18,7 @@ from agent_data_pipeline_spark.streaming import (
     stream_to_memory,
     tumbling_window_agg,
 )
+from agent_data_pipeline_spark.streaming.core import _stream_width
 
 SF = "/root/testdata/sf0.001"
 
@@ -181,6 +182,29 @@ def test_foreach_batch_parquet_sink(spark, events_batch, events_dir, tmp_path):
     want = events_batch.filter(F.col("event_type") == "click")
     assert written.count() == want.count()
     assert set(written.columns) == set(want.columns)
+
+    # stateful input (dedup + window agg): both state operators run at
+    # the stream width, and the session's own width is left as it was
+    session_width = spark.conf.get("spark.sql.shuffle.partitions")
+    # TIMESTAMP event time, so the dedup's watermark reaches the window
+    # agg (stream_dedup casts an NTZ column back after its watermark)
+    src = stream_parquet(spark, events_dir, events_batch.schema)
+    dedup = stream_dedup(
+        src.withColumn("ts", F.col("ts").cast("timestamp")),
+        ["user_id", "event_type"],
+        ts_col="ts",
+        watermark="10 minutes",
+    )
+    agg = tumbling_window_agg(
+        dedup, "ts", "1 hour", [F.count(F.lit(1)).alias("n")], keys=["event_type"]
+    )
+    q = foreach_batch_parquet_sink(
+        agg, str(tmp_path / "agg_out"), str(tmp_path / "agg_ckpt")
+    )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == session_width
+    progress = drain(q)
+    widths = [s["numShufflePartitions"] for s in progress["stateOperators"]]
+    assert widths == [_stream_width(spark)] * 2
 
 
 def test_stream_ingest_csv_incremental(spark, tmp_path):

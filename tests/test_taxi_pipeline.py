@@ -159,3 +159,22 @@ def test_validate_gate_raises_on_empty(spark):
     empty = spark.range(0).selectExpr("id AS x")
     with pytest.raises(ValueError, match="No data"):
         validate_nonempty(empty, "raw")
+
+
+@pytest.mark.parametrize(
+    "rows, what",
+    [
+        # header only: the raw gate fires
+        ([], "raw"),
+        # one row with trip_distance = 0: the clean writes no data files,
+        # and the post-write gate must still raise its own error, not a
+        # schema-inference failure on the empty read-back
+        ([ROWS[6]], "cleaned"),
+    ],
+)
+def test_pipeline_gates_raise_on_no_data(spark, tmp_path, rows, what):
+    p = tmp_path / "raw" / "yellow_tripdata_gate.csv"
+    p.parent.mkdir(parents=True, exist_ok=True)
+    p.write_text("\n".join([HEADER, *rows]) + "\n")
+    with pytest.raises(ValueError, match=f"No data in {what} taxi trips"):
+        run_taxi_pipeline(spark, _read_raw(spark, str(p)), str(tmp_path / "cleaned"))
